@@ -1855,7 +1855,7 @@ def q_owlnets_decode(spark, sf_dir):
     someValuesFrom restrictions, intersectionOf lists, axiom reifications,
     negation restrictions (lacks_part → dropped root + status), per-region
     unionOf lists, plus a plain subclass backbone. The decode itself is an
-    iterative forest assignment + applyInPandas tree walk, but the EXPECTED
+    recursive forest assignment + applyInArrow tree walk, but the EXPECTED
     output is closed-form from the generation rules (reference decode
     semantics, pkt_kg/owlnets.py:501-589), so a DuckDB oracle applies:
 
@@ -3202,7 +3202,7 @@ def oracle_sql() -> dict[str, str]:
                   '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
                 regexp_extract(url,
                   '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS rawpath,
-                regexp_extract(url, '\?([^#]*)', 1) AS query
+                regexp_extract(url, '\\?([^#]*)', 1) AS query
               FROM raw
             ),
             built AS (

@@ -48,7 +48,7 @@ HEADLINE = [
     "embedding_near_dup",
     "pipeline_triples",
     # ANN + decode surface (round 4): tracks the single-scan LSH claim,
-    # the md5-simhash banding cost, and the applyInPandas decode cost
+    # the md5-simhash banding cost, and the applyInArrow decode cost
     "lsh_topk",
     "simhash_near_dup",
     "owlnets_decode",

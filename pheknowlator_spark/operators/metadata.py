@@ -9,6 +9,7 @@ node_metadata_dict, metadata.py:43-56)::
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -104,6 +105,13 @@ TRIPLE_SCHEMA = (
 )
 
 
+def _local_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """Literal rows as a ``LocalRelation``: a pandas frame goes
+    through Arrow once at creation, where a plain list becomes a Python-RDD
+    scan that every action re-runs through a Python worker."""
+    return spark.createDataFrame(pd.DataFrame(rows), schema)
+
+
 def ontology_header(
     spark,
     filename: str,
@@ -138,7 +146,7 @@ def ontology_header(
         (url, rdfs_comment, PKT_AUTHORS, True, None, None),
         (url, rdfs_comment, "For more information visit: " + PKT_URL, True, None, None),
     ]
-    return spark.createDataFrame(rows, TRIPLE_SCHEMA)
+    return _local_frame(spark, rows, TRIPLE_SCHEMA)
 
 
 def adds_ontology_annotations(
@@ -247,7 +255,8 @@ def extract_metadata(graph: DataFrame, include_builtin_relations: bool = True) -
     )
     if include_builtin_relations:
         spark = graph.sparkSession
-        builtin = spark.createDataFrame(
+        builtin = _local_frame(
+            spark,
             [(u, k, l, d, None) for u, k, l, d in BUILTIN_RELATIONS],
             "uri string, kind string, label string, description string, "
             "synonyms array<string>",

@@ -7,10 +7,11 @@ Re-expresses the reference's OWL-NETS 2.0 algorithm
    subjects plus qualifying owl:Axiom nodes (annotatedSource/Target typed
    as Class, owlnets.py:793-799). Pure filters/joins.
 2. **BNode-forest assignment (J7)** — every anonymous node is attached to
-   the root(s) that reach it, by iterative frontier-expansion joins
-   (bounded by OWL class-expression depth, ≤ ~10 rounds).
+   the root(s) that reach it by one recursive query (``WITH RECURSIVE``,
+   a ``UnionLoop`` in the plan) whose levels run inside the consuming
+   action; no Python-side level loop, probe or per-level lineage cut.
 3. **Per-root decode (N2-N8)** — each root's forest is a few dozen triples;
-   groups are processed with ``applyInPandas`` running the recursive
+   groups are processed with ``applyInArrow`` running the recursive
    decode: subClassOf hops, union/intersection rdf:List walks, restriction
    decoding, PATO property-selection, negation/complementOf gates,
    cardinality capture, and duplicate-predicate resolution (A10). This is
@@ -29,9 +30,7 @@ BNodes are strings prefixed ``_:`` or ``bnode:``.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -140,80 +139,45 @@ def decode_roots(triples: DataFrame) -> DataFrame:
 # J7: BNode-forest assignment
 # ---------------------------------------------------------------------------
 
-def assign_forests(triples: DataFrame, roots: DataFrame, max_depth: int = 12) -> DataFrame:
+# One recursive query: the anchor is every root's own out-edges, and each
+# recursion level expands the anonymous objects of the previous level. The
+# per-path ``path`` guard stops a walk at a node it already expanded, so
+# cycles, self-loops, diamonds and bnodes shared between roots terminate
+# with the same edge sets a per-root visited set gives; DISTINCT folds the
+# duplicate rows of repeated paths. Level 0 is the anchor, so the limit is
+# ``max_depth + 1``.
+_FOREST_SQL = """
+WITH RECURSIVE forest(root, s, p, o, o_is_literal, path)
+MAX RECURSION LEVEL {levels} AS (
+  SELECT r.root, e.s, e.p, e.o, e.o_is_literal, array(r.root)
+  FROM {roots} r JOIN {t} e ON e.s = r.root
+  UNION ALL
+  SELECT f.root, e.s, e.p, e.o, e.o_is_literal, array_append(f.path, f.o)
+  FROM forest f JOIN {t} e ON e.s = f.o
+  WHERE (startswith(f.o, '_:') OR startswith(f.o, 'bnode:'))
+    AND NOT array_contains(f.path, f.o)
+)
+SELECT DISTINCT root, s, p, o, o_is_literal FROM forest
+"""
+
+
+def assign_forests(triples: DataFrame, roots: DataFrame, max_depth: int = 100) -> DataFrame:
     """Attach to each root every triple reachable from it through anonymous
     nodes (reconciles_classes / recurses_axioms, owlnets.py:227-319).
 
     Returns ``[root, s, p, o, o_is_literal]`` — the per-root forest,
-    including the root's own out-edges. Frontier expansion is a join per
-    OWL-expression depth level; forests are tiny (≤ dozens of triples), the
-    number of roots is what parallelizes.
+    including the root's own out-edges. The walk is one lazy recursive
+    query (a ``UnionLoop`` in the plan): building it starts no job, and
+    the levels run inside whatever action consumes the forests.
+    ``max_depth`` bounds the anonymous-node chain length; a deeper chain
+    raises ``RECURSION_LEVEL_LIMIT_EXCEEDED`` rather than truncating.
     """
-    t = triples.select("s", "p", "o", "o_is_literal")
-    # cut once: the base feeds both the accumulator and the first frontier
-    root_edges = _cut_lineage(
-        roots.join(t, roots.root == t.s, "inner").select(
-            "root", "s", "p", "o", "o_is_literal"
-        )
+    return triples.sparkSession.sql(
+        _FOREST_SQL,
+        levels=max_depth + 1,
+        roots=roots.select("root"),
+        t=triples.select("s", "p", "o", "o_is_literal"),
     )
-    # accumulate LAZY per-level deltas and distinct ONCE at the end — the
-    # old shape re-checkpointed the whole accumulated forest every level
-    # (O(depth²) re-materialization; at tiny forest depth the per-level
-    # job overhead dominated the entire decode)
-    acc_parts = [root_edges]
-    out_cols = ["root", "s", "p", "o", "o_is_literal"]
-    # frontier: anonymous objects not yet expanded per root (lazy — one
-    # filter/distinct over the checkpointed base)
-    frontier = (
-        root_edges.filter(_bnode_col(F.col("o")))
-        .select("root", F.col("o").alias("node"))
-        .distinct()
-    )
-    visited = frontier
-    for _ in range(max_depth):
-        # ONE lineage cut per level (reliable-checkpoint aware — executor
-        # loss mid-walk on a real cluster must not recompute the whole
-        # frontier chain): the checkpointed delta carries the expanded
-        # triples AND a ``__new`` frontier flag (bnode object not yet
-        # visited, via one left join against the union of prior deltas'
-        # frontier rows) — the former second cut per level for the
-        # frontier alone doubled the per-level job count while t was
-        # still scanned exactly once per level either way
-        # visited is exact (disjoint unions of per-level distincts) — no
-        # dedup needed before the flag join
-        seen = visited.select(
-            "root", F.col("node").alias("o"), F.lit(True).alias("__seen")
-        )
-        delta = _cut_lineage(
-            frontier.join(t, frontier.node == t.s, "inner")
-            .select("root", "s", "p", "o", "o_is_literal")
-            .join(seen, ["root", "o"], "left")
-            .select(
-                *out_cols,
-                (
-                    _bnode_col(F.col("o")) & F.col("__seen").isNull()
-                ).alias("__new"),
-            )
-        )
-        # ONE emptiness probe per level: no flagged rows covers both the
-        # empty-delta and the exhausted-frontier case (an empty delta
-        # union part downstream is free)
-        acc_parts.append(delta.select(*out_cols))
-        new_frontier = (
-            delta.filter(F.col("__new"))
-            .select("root", F.col("o").alias("node"))
-            .distinct()
-        )
-        if new_frontier.isEmpty():
-            break
-        # successive frontiers are disjoint by the ``__new`` flag — plain
-        # union keeps the visited set exact with no distinct shuffle
-        visited = visited.unionByName(new_frontier)
-        frontier = new_frontier
-    acc = acc_parts[0]
-    for part in acc_parts[1:]:
-        acc = acc.unionByName(part)
-    return acc.distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -451,24 +415,27 @@ def _decode_forest(root: str, rows: list[tuple[str, str, str, bool]]):
     return out_triples, status
 
 
-def decode_forests(forests: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Run the per-root decode via applyInPandas grouped by root."""
+_MIXED_COLS = ["root", "a", "b", "c", "kind"]
+_MIXED_SCHEMA = ", ".join(c + " string" for c in _MIXED_COLS)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        root = key[0]
-        rows = list(
-            zip(pdf["s"], pdf["p"], pdf["o"], pdf["o_is_literal"])
-        )
-        triples, status = _decode_forest(root, rows)
-        trip_rows = [(root, s, p, o, "triple") for s, p, o in triples]
-        stat_rows = [(root, st, d, "", "status") for st, d in status]
-        return pd.DataFrame(
-            trip_rows + stat_rows, columns=["root", "a", "b", "c", "kind"]
-        )
 
-    mixed = forests.groupBy("root").applyInPandas(
-        run, "root string, a string, b string, c string, kind string"
+def _decode_group(key, table):
+    """One root's forest → its decoded triples and status rows, tagged by
+    ``kind`` so a single grouped pass yields both outputs."""
+    root = key[0].as_py()
+    cols = [table.column(c).to_pylist() for c in ("s", "p", "o", "o_is_literal")]
+    triples, status = _decode_forest(root, list(zip(*cols)))
+    out = [(root, s, p, o, "triple") for s, p, o in triples]
+    out += [(root, st, d, "", "status") for st, d in status]
+    return pa.Table.from_arrays(
+        [pa.array(c, pa.string()) for c in (list(zip(*out)) or [()] * 5)],
+        names=_MIXED_COLS,
     )
+
+
+def decode_forests(forests: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Run the per-root decode via applyInArrow grouped by root."""
+    mixed = forests.groupBy("root").applyInArrow(_decode_group, _MIXED_SCHEMA)
     decoded = mixed.filter(F.col("kind") == "triple").select(
         "root", F.col("a").alias("s"), F.col("b").alias("p"), F.col("c").alias("o")
     )
@@ -596,8 +563,9 @@ def run_owlnets(
     # cut lineage ONCE on the combined graph: make_graph_connected reads
     # its input from four subtrees (closure base, node set, neighbor set,
     # final union) — without the cut each consumer re-ran the whole
-    # applyInPandas decode + the plain-triples filter tree (~4× the decode
-    # cost; at cluster scale 4 redundant scans of the decoded graph)
+    # forest walk + applyInArrow decode + the plain-triples filter tree
+    # (~4× the decode cost; at cluster scale 4 redundant scans of the
+    # decoded graph)
     combined = _cut_lineage(plain.unionByName(cleaned).distinct())
     connected = make_graph_connected(combined, approach or "subclass")
     out = {

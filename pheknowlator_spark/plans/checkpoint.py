@@ -154,7 +154,8 @@ class StageStore:
         # with pyarrow directly (one buffered file write) instead of a
         # Spark createDataFrame→write job per stage: the job-scheduling
         # round trip cost ~0.4 s per stage commit, ~20% of a warm
-        # full_build, for rows that never touch an executor
+        # full_build, for rows that never touch an executor. pyarrow is a
+        # required dependency (README "Requirements"); no Spark fallback
         import datetime
 
         import pyarrow as pa

@@ -58,6 +58,9 @@ def get_spark(
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # recursive CTEs (the OWL-NETS forest walk) may emit any number of
+        # rows; Spark's default caps the total at 1,000,000 and errors past it
+        .config("spark.sql.cteRecursionRowLimit", "-1")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")

@@ -256,3 +256,104 @@ def test_forest_assignment_depth(spark):
         (r.s, r.p, r.o) for r in forests.filter(F.col("root") == X).collect()
     }
     assert ("bnode:3", RDF_FIRST, B) in x_forest  # depth-3 bnode reached
+
+
+def test_union_of_twenty_members_fully_decoded(spark):
+    # a 20-member rdf:List sits 21 anonymous levels below the root; the
+    # whole list must decode, not the prefix a fixed level budget reaches
+    members = [OBO + f"M_{i}" for i in range(20)]
+    rows = [t(X, RDF_TYPE, OWL_CLASS), t(X, RDFS_SUBCLASSOF, "bnode:c1")]
+    rows += [t(m, RDF_TYPE, OWL_CLASS) for m in members]
+    rows += [
+        t("bnode:c1", RDF_TYPE, OWL_CLASS),
+        t("bnode:c1", OWL_NS + "unionOf", "bnode:l0"),
+    ]
+    for i, m in enumerate(members):
+        rest = f"bnode:l{i + 1}" if i < len(members) - 1 else RDF_NIL
+        rows += [t(f"bnode:l{i}", RDF_FIRST, m), t(f"bnode:l{i}", RDF_REST, rest)]
+    got, _ = decoded_set(spark, rows)
+    assert {(m, RDFS_SUBCLASSOF, X) for m in members} <= got
+
+
+def _chain(spark, n):
+    # X → bnode:1 → … → bnode:n → Y: n anonymous levels below the root,
+    # n + 2 forest triples (X's rdf:type and subClassOf edges included)
+    rows = [t(X, RDF_TYPE, OWL_CLASS), t(X, RDFS_SUBCLASSOF, "bnode:1")]
+    rows += [t(f"bnode:{i}", RDF_REST, f"bnode:{i + 1}") for i in range(1, n)]
+    rows.append(t(f"bnode:{n}", RDF_FIRST, Y))
+    triples = make_triples(spark, rows)
+    return triples, spark.createDataFrame([(X,)], "root string")
+
+
+def test_forest_depth_limit_raises_instead_of_truncating(spark):
+    triples, roots = _chain(spark, 6)
+    # exactly max_depth anonymous levels still assigns the whole chain
+    assert assign_forests(triples, roots, max_depth=6).count() == 8
+    with pytest.raises(Exception, match="RECURSION_LEVEL_LIMIT_EXCEEDED"):
+        assign_forests(triples, roots, max_depth=5).collect()
+
+
+def _bfs_forests(rows, roots):
+    """Reference forests: each root's out-edges plus the out-edges of every
+    anonymous node reachable from it through anonymous nodes."""
+    out_edges = {}
+    for s, p, o in rows:
+        out_edges.setdefault(s, []).append((s, p, o))
+    forests = set()
+    for root in roots:
+        seen, queue = {root}, [root]
+        while queue:
+            node = queue.pop(0)
+            for s, p, o in out_edges.get(node, []):
+                forests.add((root, s, p, o))
+                if o.startswith(("_:", "bnode:")) and o not in seen:
+                    seen.add(o)
+                    queue.append(o)
+    return forests
+
+
+@pytest.mark.parametrize(
+    "rows,roots",
+    [
+        # bnode cycle
+        ([(X, "p", "_:a"), ("_:a", "q", "_:b"), ("_:b", "r", "_:a"),
+          ("_:b", "s", Y)], [X]),
+        # one bnode shared by two roots
+        ([(X, "p", "_:s"), (Y, "p", "_:s"), ("_:s", "q", A)], [X, Y]),
+        # diamond
+        ([(X, "p", "_:l"), (X, "p", "_:r"), ("_:l", "q", "_:d"),
+          ("_:r", "q", "_:d"), ("_:d", "s", B)], [X]),
+        # bnode self-loop, and a bnode root
+        ([(X, "p", "_:a"), ("_:a", "q", "_:a"), ("_:a", "r", A),
+          ("_:ax", "p", "_:a")], [X, "_:ax"]),
+    ],
+    ids=["cycle", "shared", "diamond", "self_loop"],
+)
+def test_assign_forests_matches_bfs(spark, rows, roots):
+    triples = spark.createDataFrame(
+        [(s, p, o, False) for s, p, o in rows],
+        "s string, p string, o string, o_is_literal boolean",
+    )
+    root_df = spark.createDataFrame([(r,) for r in roots], "root string")
+    got = {
+        (r.root, r.s, r.p, r.o)
+        for r in assign_forests(triples, root_df).collect()
+    }
+    assert got == _bfs_forests(rows, roots)
+
+
+def test_assign_forests_is_one_lazy_recursive_plan(spark):
+    triples, roots = _chain(spark, 3)
+    sc = spark.sparkContext
+    group = "assign_forests_plan_probe"
+    sc.setJobGroup(group, "no job while building the forest plan")
+    try:
+        forests = assign_forests(triples, roots)
+        plan = forests._jdf.queryExecution().optimizedPlan().toString()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert "UnionLoop" in plan
+        assert forests.count() == 5
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
